@@ -495,7 +495,10 @@ object Bench {
       .collect { case r if r.min >= 0 && SparkEntry.buildQueries(r.name) => r.min }.sum
     val totalServe = total - totalBuild
     val failStr = failures.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val detail = s"""{${graft.tools.Provenance.jsonFields},${quiet.jsonFields},"metric":"total","value":$total,"unit":"sec","total_build":${fmtSec(totalBuild)},"total_serve":${fmtSec(totalServe)},"queries":$qs,"samples":$sampleStr,"gc_ms":$gcStr,"offset_ms":$atStr,"load1":$loadStr,"steal_ms":$stealStr,"steal_retries":$retryStr,"ext_cpu_ms":$extCpuStr,"serve_latency_ms":$latStr,"started_at_ms":$startedAtMs,"reps":$reps,"lat_reps":$latReps,"cpus":$cpus,"sf":"$sfDir","failures":$failStr,"errors":$errStr}"""
+    // aqe / excluded_rules: the EFFECTIVE session values, so a run under
+    // a SPARK_GRAFT_AQE or SPARK_GRAFT_EXCLUDED_RULES override is told
+    // apart from a default run by its artifact alone
+    val detail = s"""{${graft.tools.Provenance.jsonFields},${quiet.jsonFields},"metric":"total","value":$total,"unit":"sec","total_build":${fmtSec(totalBuild)},"total_serve":${fmtSec(totalServe)},"queries":$qs,"samples":$sampleStr,"gc_ms":$gcStr,"offset_ms":$atStr,"load1":$loadStr,"steal_ms":$stealStr,"steal_retries":$retryStr,"ext_cpu_ms":$extCpuStr,"serve_latency_ms":$latStr,"started_at_ms":$startedAtMs,"reps":$reps,"lat_reps":$latReps,"cpus":$cpus,"sf":"$sfDir","aqe":${jstr(spark.conf.get("spark.sql.adaptive.enabled"))},"excluded_rules":${jstr(spark.conf.get("spark.sql.optimizer.excludedRules", ""))},"failures":$failStr,"errors":$errStr}"""
     // full per-query detail (all samples, gc deltas, offsets, error texts):
     // stderr + a repo file, NOT stdout — the driver stores and parses only
     // a 2000-char stdout tail, so stdout must stay a single short line

@@ -29,12 +29,16 @@ object Tables {
     // a DIRECTORY-shaped dataset signs by its child listing (ADVICE r14:
     // replacing a part file in place changes neither the dir's length
     // nor, on some filesystems, its mtime — the root-status signature
-    // could serve a stale file index); the single-file fixtures keep the
-    // one-status fast path
+    // could serve a stale file index), one level into child directories
+    // so a partitioned layout's part files sign too; the single-file
+    // fixtures keep the one-status fast path
+    def sign(prefix: String, c: org.apache.hadoop.fs.FileStatus) =
+      s"$prefix${c.getPath.getName}:${c.getLen}:${c.getModificationTime}"
     if (s.isDirectory)
-      fs.listStatus(p).map(c =>
-          s"${c.getPath.getName}:${c.getLen}:${c.getModificationTime}")
-        .sorted.mkString("|")
+      fs.listStatus(p).toSeq.flatMap { c =>
+        sign("", c) +: (if (!c.isDirectory) Nil
+          else fs.listStatus(c.getPath).toSeq.map(sign(c.getPath.getName + "/", _)))
+      }.sorted.mkString("|")
     else s"${s.getLen}:${s.getModificationTime}"
   }
 

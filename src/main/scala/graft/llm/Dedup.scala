@@ -237,6 +237,17 @@ object Dedup {
     *
     * (Round-1 shape recomputed the full prepare 4×: both self-join sides
     * plus both verify sides.)
+    *
+    * Session requirement: the shingle+MinHash kernel runs once per
+    * corpus row only when the session excludes `InferFiltersFromGenerate`
+    * ([[graft.SessionTuning.ExcludedRules]] in
+    * `spark.sql.optimizer.excludedRules`, as every entry point of this
+    * repo sets it). Under a default session that rule infers a
+    * `size(...) > 0` filter from the `posexplode` over the kernel's
+    * output and evaluates the kernel a second time below it — the same
+    * pairs, at up to twice the candidate-pass cost. The same holds for
+    * the `explode(array(jaccard(...)))` barrier of
+    * [[minhashNearDupJoin]].
     */
   def minhashNearDupPairs(
       df: DataFrame, id: Column, text: Column,

@@ -83,21 +83,69 @@ object Fusion {
     * exact-scan fusion ([[rrfFromIndex]] + a cosine top-k) remains the
     * recall gate, exactly as [[IvfPq.serve]] keeps
     * [[ProductQuant.exactTopK]] as its own.
+    *
+    * Each arm picks its own plan ([[InvertedIndex.bm25TopKAuto]],
+    * [[IvfPq.serveRerankedFromIndex]]). When BOTH come back driver-local
+    * (each under [[DriverScan.LocalServeBytes]] of probed files), the
+    * fusion runs on the driver too — the same `1/(k+rank)` sums and
+    * `n_lists` counts as [[rrf]], returned as a `LocalRelation`, so the
+    * whole request runs zero Spark jobs. Otherwise the distributed
+    * [[rrf]] plan fuses, a local arm entering it as a `LocalRelation`.
     */
   def rrfFromIndexes(spark: SparkSession, lexIndexPath: String,
       vecIndexPath: String, queryTerms: Seq[String],
       queryVec: Array[Double], cents: Array[Array[Double]],
       pqCents: Array[Array[Array[Double]]], nProbe: Int, rerankR: Int,
       topK: Int, k: Int = 60): DataFrame = {
-    val lexical = InvertedIndex.bm25TopKAuto(spark, lexIndexPath, queryTerms, topK)
-      .withColumn("rank",
-        row_number().over(Window.orderBy(col("score").desc, col("id"))))
-      .select("id", "rank")
-    val dense = IvfPq.serveRerankedFromIndex(spark, vecIndexPath, cents,
-        pqCents, queryVec, nProbe, rerankR, topK)
-      .withColumn("rank",
-        row_number().over(Window.orderBy(col("d2"), col("id"))))
-      .select("id", "rank")
-    rrf(Seq(lexical, dense), "id", "rank", k)
+    require(queryTerms.nonEmpty, "queryTerms must be non-empty")
+    require(IvfPq.hasRaw(spark, vecIndexPath),
+      s"$vecIndexPath stores no raw vectors (write with storeRaw = true)")
+    val lexLocal = InvertedIndex.bm25Local(spark, lexIndexPath, queryTerms,
+      topK, None, DriverScan.LocalServeBytes)
+    val denseLocal = IvfPq.rerankedLocal(spark, vecIndexPath, cents, pqCents,
+      queryVec, nProbe, rerankR, topK, None, DriverScan.LocalServeBytes)
+    (lexLocal, denseLocal) match {
+      case (Some(l), Some(d)) => rrfLocal(spark, Seq(l, d), k)
+      case _ =>
+        val lexical = lexLocal.map(_.toDF(spark, "score"))
+          .getOrElse(InvertedIndex.bm25TopKDistributed(spark, lexIndexPath,
+            queryTerms, topK, None))
+          .withColumn("rank",
+            row_number().over(Window.orderBy(col("score").desc, col("id"))))
+          .select("id", "rank")
+        val dense = denseLocal.map(_.toDF(spark, "d2"))
+          .getOrElse(IvfPq.serveRerankedDistributed(spark, vecIndexPath,
+            cents, pqCents, queryVec, nProbe, rerankR, topK, None))
+          .withColumn("rank",
+            row_number().over(Window.orderBy(col("d2"), col("id"))))
+          .select("id", "rank")
+        rrf(Seq(lexical, dense), "id", "rank", k)
+    }
+  }
+
+  /** [[rrf]] over driver-local rankings (each already in rank order):
+    * (id, rrf_score, n_lists) ordered by (rrf_score desc, id). The ids
+    * widen to long when the arms' id types differ, as the union does.
+    */
+  private def rrfLocal(spark: SparkSession,
+      rankings: Seq[DriverScan.Ranked], k: Int): DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    require(k >= 1, s"rrf: k must be >= 1 (got $k)")
+    val fused = collection.mutable.HashMap.empty[Long, (Double, Long)]
+    rankings.foreach(_.rows.iterator.zipWithIndex.foreach { case ((id, _), i) =>
+      val (s, n) = fused.getOrElse(id, (0.0, 0L))
+      fused(id) = (s + 1.0 / (k.toDouble + (i + 1).toDouble), n + 1)
+    })
+    val idType = rankings.map(_.idType).distinct match {
+      case Seq(t) => t
+      case _ => LongType
+    }
+    DriverScan.frame(spark,
+      StructType(Seq(StructField("id", idType),
+        StructField("rrf_score", DoubleType),
+        StructField("n_lists", LongType, nullable = false))),
+      fused.toSeq.sortBy { case (id, (s, _)) => (-s, id) }
+        .map { case (id, (s, n)) => Row(DriverScan.idValue(idType, id), s, n) })
   }
 }

@@ -780,11 +780,17 @@ object InvertedIndex {
 
   /** The tombstone set, if any delete has run since the last compact. */
   private def tombstones(spark: SparkSession,
+      path: String): Option[DataFrame] =
+    tombstoneRelation(spark, path).map(_.distinct())
+
+  /** The relation-cached `_tombstones` sidecar, if any — valid under the
+    * `_stats` signature because [[delete]] bumps the generation there.
+    */
+  private def tombstoneRelation(spark: SparkSession,
       path: String): Option[DataFrame] = {
     val p = new org.apache.hadoop.fs.Path(path, "_tombstones")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) Some(spark.read.parquet(p.toString).distinct())
-    else None
+    if (fs.exists(p)) Some(readCached(spark, path, p.toString)) else None
   }
 
   /** `rows` minus the tombstoned ones: a row dies only to a tombstone
@@ -980,15 +986,20 @@ object InvertedIndex {
   private def grid4(x: Double): Double =
     BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
 
+  // StrictMath: Spark's `log` expression evaluates with it, so driver
+  // and plan idf are the same double
   private def idfOf(st: Stats)(df: Double): Double =
-    math.log((st.nDocs - df + 0.5) / (df + 0.5) + 1)
+    StrictMath.log((st.nDocs - df + 0.5) / (df + 0.5) + 1)
 
   /** The per-posting BM25 partial, driver-side — the same arithmetic as
-    * [[bm25Part]] with the corpus scalars applied.
+    * [[bm25Part]] with the corpus scalars applied (the idf is computed
+    * once per (stats, df), then applied per posting).
     */
-  private def partOf(st: Stats, df: Double)(tf: Double, dl: Double): Double =
-    idfOf(st)(df) * tf * (Bm25.K1 + 1) /
+  private def partOf(st: Stats, df: Double): (Double, Double) => Double = {
+    val idf = idfOf(st)(df)
+    (tf, dl) => idf * tf * (Bm25.K1 + 1) /
       (tf + Bm25.K1 * (1 - Bm25.B + Bm25.B * dl / st.avgdl))
+  }
 
   /** MaxScore's θ threshold from the sidecar's stored impact pairs —
     * ZERO Spark jobs (round 13; the old per-request θ-probe was a whole
@@ -1403,24 +1414,99 @@ object InvertedIndex {
     else "plain"
   }
 
-  /** Per-query serve-strategy pick — Lucene's per-query
-    * early-termination flip made automatic: serve with
-    * [[bm25TopKMaxScore]] when the sidecar says the prunable posting
-    * mass exceeds `minPruneRows` ([[maxScoreWorthwhile]]), else the
-    * plain one-pass [[bm25TopK]]. Both branches are EXACT, so the pick
-    * changes cost, never an answer (spec-pinned); the decision reads
-    * only the cached `_terms` stats, so a warm pick launches no Spark
-    * job.
+  /** Per-query serve-strategy pick over three exact plans — the answer
+    * never depends on the pick (spec-pinned), only the cost does:
+    *  - DRIVER-LOCAL ([[bm25Local]]) when the probed bucket files plus
+    *    the tombstones total at most [[DriverScan.LocalServeBytes]]
+    *    (sizes from the cached file index, no LIST): the calling thread
+    *    reads the probed postings with Spark's parquet reader, counts df
+    *    from the live probed rows, scores with [[partOf]] / [[grid4]],
+    *    and returns a `LocalRelation` — zero Spark jobs, and no `_terms`
+    *    read;
+    *  - otherwise Lucene's per-query early-termination flip: serve with
+    *    [[bm25TopKMaxScore]] when the sidecar says the prunable posting
+    *    mass exceeds `minPruneRows` ([[maxScoreWorthwhile]]), else the
+    *    plain one-pass [[bm25TopK]]. That decision reads only the cached
+    *    `_terms` stats, so a warm pick launches no Spark job.
     */
   def bm25TopKAuto(spark: SparkSession, path: String,
       queryTerms: Seq[String], topK: Int = 20,
       asOfGen: Option[Long] = None,
       minPruneRows: Double = DefaultMinPruneRows): DataFrame = {
     require(queryTerms.nonEmpty, "queryTerms must be non-empty")
+    bm25Local(spark, path, queryTerms, topK, asOfGen,
+        DriverScan.LocalServeBytes)
+      .map(_.toDF(spark, "score"))
+      .getOrElse(bm25TopKDistributed(spark, path, queryTerms, topK, asOfGen,
+        minPruneRows))
+  }
+
+  /** The distributed plans of [[bm25TopKAuto]] (MaxScore or plain),
+    * whatever the probed size.
+    */
+  private[graft] def bm25TopKDistributed(spark: SparkSession, path: String,
+      queryTerms: Seq[String], topK: Int, asOfGen: Option[Long],
+      minPruneRows: Double = DefaultMinPruneRows): DataFrame =
     if (pickStrategy(spark, path, queryTerms, asOfGen, minPruneRows,
         topK) == "maxscore")
       bm25TopKMaxScore(spark, path, queryTerms, topK, asOfGen)
     else bm25TopK(spark, path, queryTerms, topK, asOfGen)
+
+  /** [[bm25TopK]]'s rows computed on the driver, or None when the probed
+    * bucket files and tombstones exceed `maxBytes` (or doc ids are not
+    * integral). One pass over the probed files keeps the live postings
+    * of the query terms ([[liveRows]]' rule via [[DriverScan.visible]]);
+    * df is their per-term count — exactly the live-postings df the plain
+    * serve joins — and each doc's partials sum in posting order before
+    * the 4-dp snap, ordered by (score desc, id).
+    */
+  private[graft] def bm25Local(spark: SparkSession, path: String,
+      queryTerms: Seq[String], topK: Int, asOfGen: Option[Long],
+      maxBytes: Long): Option[DriverScan.Ranked] = {
+    import org.apache.spark.unsafe.types.UTF8String
+    val st = readStats(spark, path, asOfGen)
+    val qts = queryTerms.distinct
+    val idx = readCached(spark, path, path)
+    val idType = idx.schema("doc_id").dataType
+    val buckets = qts.map(bucketOfLocal(_, st.nBuckets)).toSet
+    val probed = DriverScan.files(idx, p => buckets(p.getInt(0)))
+    val tomb = tombstoneRelation(spark, path).map(DriverScan.files(_, _ => true))
+    if (!DriverScan.integralId(idType) ||
+        probed.bytes + tomb.fold(0L)(_.bytes) > maxBytes) return None
+    val dead = DriverScan.tombstoneGens(tomb, "doc_id", asOfGen)
+    val termIx = qts.iterator.map(UTF8String.fromString).zipWithIndex.toMap
+    val df = new Array[Double](qts.length)
+    // the live hits, as columns: term index, doc id, tf, dl
+    val hitT = Array.newBuilder[Int]
+    val hitId = Array.newBuilder[Long]
+    val hitTf = Array.newBuilder[Double]
+    val hitDl = Array.newBuilder[Double]
+    DriverScan.foreach(probed, Seq("term", "doc_id", "tf", "dl", "gen"),
+        Seq(org.apache.spark.sql.sources.In("term", qts.toArray[Any]))) { r =>
+      termIx.get(r.getUTF8String(0)).foreach { t =>
+        val id = DriverScan.idAt(r, 1, idType)
+        if (DriverScan.visible(dead, asOfGen, id, r.getLong(4))) {
+          df(t) += 1
+          hitT += t; hitId += id; hitTf += r.getDouble(2); hitDl += r.getDouble(3)
+        }
+      }
+    }
+    val part = df.map(partOf(st, _))
+    val (ts, ids, tfs, dls) =
+      (hitT.result(), hitId.result(), hitTf.result(), hitDl.result())
+    val score = collection.mutable.LongMap.empty[Double]
+    ids.indices.foreach { i =>
+      score(ids(i)) = score.getOrElse(ids(i), 0.0) + part(ts(i))(tfs(i), dls(i))
+    }
+    // grid4 is monotone and moves a score by at most half a grid step,
+    // so the top-k by snapped score lies within one step (plus slack) of
+    // the k-th best raw score: snap only those docs
+    val raw = score.values.toArray.sorted
+    val floor = if (topK < 1 || raw.length <= topK) Double.NegativeInfinity
+      else raw(raw.length - topK) - 2e-4
+    Some(DriverScan.Ranked(idType, score.iterator
+      .collect { case (id, s) if s >= floor => (id, grid4(s)) }.toSeq
+      .sortBy { case (id, s) => (-s, id) }.take(topK)))
   }
 
   /** FILTERED lexical serving — the access-controlled / tenant /

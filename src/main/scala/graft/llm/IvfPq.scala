@@ -68,7 +68,7 @@ object IvfPq {
 
   /** Whether the index stores raw vectors alongside its codes. */
   def hasRaw(spark: SparkSession, path: String): Boolean =
-    readCached(spark, path).schema.fieldNames.contains("vec")
+    readCached(spark, path, path).schema.fieldNames.contains("vec")
 
   /** Relation-cached read of the index ([[graft.llm.InvertedIndex]]'s
     * readCached discipline — Lucene's open-index-reader shape): an
@@ -79,17 +79,19 @@ object IvfPq {
     * memoized per (session, path) against the `_gen` sidecar's file
     * listing, which every maintenance verb rewrites ([[writeGen]]), so
     * a stale relation can never serve; a warm serve's construction makes
-    * one single-directory listStatus call.
+    * one single-directory listStatus call. `dir` is the index root or
+    * its `_tombstones` sidecar ([[delete]] rewrites `_gen` too).
     */
   private val relationCache = new RelationCache()
 
-  private def readCached(spark: SparkSession, path: String): DataFrame = {
+  private def readCached(spark: SparkSession, path: String,
+      dir: String): DataFrame = {
     val p = new org.apache.hadoop.fs.Path(s"$path/_gen")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val sig = fs.listStatus(p).map(s =>
         s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
       .sorted.mkString("|")
-    relationCache.getOrResolve(spark, path, sig)(spark.read.parquet(path))
+    relationCache.getOrResolve(spark, dir, sig)(spark.read.parquet(dir))
   }
 
   /** Merge a delta snapshot into an existing index: encode ONLY the
@@ -178,11 +180,17 @@ object IvfPq {
   }
 
   private def tombstones(spark: SparkSession,
+      path: String): Option[DataFrame] =
+    tombstoneRelation(spark, path).map(_.distinct())
+
+  /** The relation-cached `_tombstones` sidecar, if any delete has run
+    * since the last compact.
+    */
+  private def tombstoneRelation(spark: SparkSession,
       path: String): Option[DataFrame] = {
     val p = new org.apache.hadoop.fs.Path(path, "_tombstones")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) Some(spark.read.parquet(p.toString).distinct())
-    else None
+    if (fs.exists(p)) Some(readCached(spark, path, p.toString)) else None
   }
 
   /** `rows` minus tombstoned ones — a row dies only to a strictly
@@ -269,7 +277,7 @@ object IvfPq {
       cents: Array[Array[Double]], query: Array[Double],
       nProbe: Int, asOfGen: Option[Long] = None): DataFrame = {
     val probes = probeOrder(cents, query, nProbe)
-    liveRows(spark, path, readCached(spark, path)
+    liveRows(spark, path, readCached(spark, path, path)
       .where(col("cluster").isin(probes: _*)), asOfGen)
   }
 
@@ -341,7 +349,6 @@ object IvfPq {
       asOfGen: Option[Long], allowedIds: Option[DataFrame]): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(queries.nonEmpty, "query batch must be non-empty")
-    val m = pqCents.length
     val qinfo: Array[(String, Array[Array[Double]], Set[Int])] =
       queries.map { case (qid, q) =>
         (qid, ProductQuant.adcTable(q, pqCents),
@@ -351,14 +358,10 @@ object IvfPq {
     val bc = spark.sparkContext.broadcast(qinfo)
     val kernel = udf { (cluster: Int, cs: Seq[Int]) =>
       bc.value.iterator.filter(_._3.contains(cluster)).map {
-        case (qid, t, _) =>
-          var adc = 0.0
-          var j = 0
-          while (j < m) { adc += t(j)(cs(j)); j += 1 }
-          (qid, math.floor(adc * 1e6 + 0.5) / 1e6)
+        case (qid, t, _) => (qid, ProductQuant.adcOf(t, cs))
       }.toSeq
     }
-    val probed = liveRows(spark, path, readCached(spark, path)
+    val probed = liveRows(spark, path, readCached(spark, path, path)
       .where(col("cluster").isin(union: _*)), asOfGen)
     val rows = allowedIds.fold(probed)(ok =>
       probed.join(ok, Seq("id"), "left_semi"))
@@ -453,13 +456,7 @@ object IvfPq {
       query: Array[Double]): org.apache.spark.sql.expressions
         .UserDefinedFunction = {
     val bcQ = spark.sparkContext.broadcast(query)
-    udf { (v: Seq[Float]) =>
-      val q = bcQ.value
-      var d = 0.0
-      var i = 0
-      while (i < q.length) { val t = v(i).toDouble - q(i); d += t * t; i += 1 }
-      math.floor(d * 1e6 + 0.5) / 1e6
-    }
+    udf { (v: Seq[Float]) => ProductQuant.exactD2Of(bcQ.value, v) }
   }
 
   /** BATCHED two-stage serve with ZERO corpus tables — [[serveBatch]]'s
@@ -484,16 +481,12 @@ object IvfPq {
       .select(col("qid"), col("id"))
     val union = queries.flatMap { case (_, q) =>
       probeOrder(cents, q, nProbe) }.distinct
-    val rows = liveRows(spark, path, readCached(spark, path)
+    val rows = liveRows(spark, path, readCached(spark, path, path)
       .where(col("cluster").isin(union: _*))
       .select(col("id"), col("vec")), asOfGen)
     val bcQ = spark.sparkContext.broadcast(queries.toMap)
     val kernel = udf { (qid: String, v: Seq[Float]) =>
-      val q = bcQ.value(qid)
-      var d = 0.0
-      var i = 0
-      while (i < q.length) { val t = v(i).toDouble - q(i); d += t * t; i += 1 }
-      math.floor(d * 1e6 + 0.5) / 1e6
+      ProductQuant.exactD2Of(bcQ.value(qid), v)
     }
     rows.join(broadcast(shortlists), "id")
       .select(col("qid"), col("id"), kernel(col("qid"), col("vec")).as("d2"))
@@ -512,6 +505,18 @@ object IvfPq {
     * was paid for at index-write time. Results are EXACTLY
     * [[serveReranked]]'s for the same parameters (the stored vector is
     * the source vector verbatim; spec-pinned).
+    *
+    * Two plans serve it, row-identical (spec-pinned):
+    *  - driver-local ([[rerankedLocal]]), when the probed cluster files
+    *    plus the tombstones total at most [[DriverScan.LocalServeBytes]]
+    *    (sizes from the cached file index, no LIST): the calling thread
+    *    reads them with Spark's parquet reader, ADC- and exact-scores
+    *    every live row with [[ProductQuant.adcOf]] /
+    *    [[ProductQuant.exactD2Of]], and returns a `LocalRelation` —
+    *    zero Spark jobs;
+    *  - otherwise the distributed two-stage plan: ADC top-R over the
+    *    probed code bytes, then the exact kernel over the R stored
+    *    vectors joined back from the same probed rows.
     */
   def serveRerankedFromIndex(spark: SparkSession, path: String,
       cents: Array[Array[Double]], pqCents: Array[Array[Array[Double]]],
@@ -519,6 +524,21 @@ object IvfPq {
       topK: Int, asOfGen: Option[Long] = None): DataFrame = {
     require(hasRaw(spark, path),
       s"$path stores no raw vectors (write with storeRaw = true)")
+    rerankedLocal(spark, path, cents, pqCents, query, nProbe, rerankR, topK,
+        asOfGen, DriverScan.LocalServeBytes)
+      .map(_.toDF(spark, "d2"))
+      .getOrElse(serveRerankedDistributed(spark, path, cents, pqCents,
+        query, nProbe, rerankR, topK, asOfGen))
+  }
+
+  /** The distributed plan of [[serveRerankedFromIndex]], whatever the
+    * probed size.
+    */
+  private[graft] def serveRerankedDistributed(spark: SparkSession,
+      path: String, cents: Array[Array[Double]],
+      pqCents: Array[Array[Array[Double]]], query: Array[Double],
+      nProbe: Int, rerankR: Int, topK: Int,
+      asOfGen: Option[Long]): DataFrame = {
     val probed = probedCodes(spark, path, cents, query, nProbe, asOfGen)
     val shortlist = ProductQuant.adcFromCodes(probed,
       col("id"), col("codes"), pqCents, query, rerankR)
@@ -528,6 +548,48 @@ object IvfPq {
       .select(col("id"), exactD2(spark, query)(col("_v")).as("d2"))
       .orderBy(col("d2"), col("id"))
       .limit(topK)
+  }
+
+  /** [[serveRerankedFromIndex]] on the driver, or None when the probed
+    * files and tombstones exceed `maxBytes` (or the index's ids are not
+    * integral). One pass reads (id, codes, vec, gen) of the probed
+    * clusters, drops rows a newer tombstone killed ([[liveRows]]' rule),
+    * and keeps (id, adc, d2) per live row; the ADC top-`rerankR` by
+    * (adc, id) is then re-ranked by (d2, id) — the distributed plan's
+    * two orders over the same doubles.
+    */
+  private[graft] def rerankedLocal(spark: SparkSession, path: String,
+      cents: Array[Array[Double]], pqCents: Array[Array[Array[Double]]],
+      query: Array[Double], nProbe: Int, rerankR: Int, topK: Int,
+      asOfGen: Option[Long], maxBytes: Long): Option[DriverScan.Ranked] = {
+    import scala.collection.immutable.ArraySeq
+    val idx = readCached(spark, path, path)
+    val idType = idx.schema("id").dataType
+    val floatVec = idx.schema("vec").dataType match {
+      case org.apache.spark.sql.types.ArrayType(
+        org.apache.spark.sql.types.FloatType, _) => true
+      case _ => false
+    }
+    val probes = probeOrder(cents, query, nProbe).toSet
+    val probed = DriverScan.files(idx, p => probes(p.getInt(0)))
+    val tomb = tombstoneRelation(spark, path).map(DriverScan.files(_, _ => true))
+    if (!DriverScan.integralId(idType) || !floatVec ||
+        probed.bytes + tomb.fold(0L)(_.bytes) > maxBytes) return None
+    val dead = DriverScan.tombstoneGens(tomb, "id", asOfGen)
+    val table = ProductQuant.adcTable(query, pqCents)
+    val scored = Array.newBuilder[(Long, Double, Double)]
+    DriverScan.foreach(probed, Seq("id", "codes", "vec", "gen"), Nil) { r =>
+      val id = DriverScan.idAt(r, 0, idType)
+      if (DriverScan.visible(dead, asOfGen, id, r.getLong(3)))
+        scored += ((id,
+          ProductQuant.adcOf(table, ArraySeq.unsafeWrapArray(r.getArray(1).toIntArray)),
+          ProductQuant.exactD2Of(query,
+            ArraySeq.unsafeWrapArray(r.getArray(2).toFloatArray))))
+    }
+    val shortlist = scored.result().sortBy(t => (t._2, t._1)).take(rerankR)
+    Some(DriverScan.Ranked(idType,
+      shortlist.sortBy(t => (t._3, t._1)).take(topK).map(t => (t._1, t._3))
+        .toSeq))
   }
 
   /** FILTERED two-stage serve with zero corpus tables — the RAG/ACL
@@ -586,16 +648,12 @@ object IvfPq {
       .select(col("qid"), col("id"))
     val union = queries.flatMap { case (_, q) =>
       probeOrder(cents, q, nProbe) }.distinct
-    val rows = liveRows(spark, path, readCached(spark, path)
+    val rows = liveRows(spark, path, readCached(spark, path, path)
       .where(col("cluster").isin(union: _*))
       .select(col("id"), col("vec")), asOfGen)
     val bcQ = spark.sparkContext.broadcast(queries.toMap)
     val kernel = udf { (qid: String, v: Seq[Float]) =>
-      val q = bcQ.value(qid)
-      var d = 0.0
-      var i = 0
-      while (i < q.length) { val t = v(i).toDouble - q(i); d += t * t; i += 1 }
-      math.floor(d * 1e6 + 0.5) / 1e6
+      ProductQuant.exactD2Of(bcQ.value(qid), v)
     }
     // the shortlist is already ⊆ allowed, so the inner join keeps the
     // re-rank pass filter-correct without a second semi-join

@@ -98,6 +98,29 @@ object ProductQuant {
       distTable(query.slice(j * sub, (j + 1) * sub), cents(j)))
   }
 
+  /** The ADC distance of one stored code row: the m rounded table
+    * entries summed in subspace order, rounded to 6 dp. The one body of
+    * every ADC kernel — the UDFs and the driver-local serve both call
+    * it, so the two paths cannot drift.
+    */
+  def adcOf(table: Array[Array[Double]], codes: collection.Seq[Int]): Double = {
+    var adc = 0.0
+    var j = 0
+    while (j < table.length) { adc += table(j)(codes(j)); j += 1 }
+    math.floor(adc * 1e6 + 0.5) / 1e6
+  }
+
+  /** The 6-dp-rounded exact squared L2 between `q` and a stored float
+    * vector — the one body of every exact re-rank kernel ([[adcOf]]'s
+    * discipline).
+    */
+  def exactD2Of(q: Array[Double], v: collection.Seq[Float]): Double = {
+    var d = 0.0
+    var i = 0
+    while (i < q.length) { val t = v(i).toDouble - q(i); d += t * t; i += 1 }
+    math.floor(d * 1e6 + 0.5) / 1e6
+  }
+
   /** Exact squared-L2 top-k against `query` — the recall baseline for
     * [[adcTopK]]: same 6-dp distance rounding, same id tie-break, one
     * narrow kernel pass + TakeOrderedAndProject.
@@ -105,13 +128,7 @@ object ProductQuant {
   def exactTopK(df: DataFrame, id: Column, vec: Column,
       query: Array[Double], topK: Int): DataFrame = {
     val bcQ = df.sparkSession.sparkContext.broadcast(query)
-    val kernel = udf { (v: Seq[Float]) =>
-      val q = bcQ.value
-      var d = 0.0
-      var i = 0
-      while (i < q.length) { val t = v(i).toDouble - q(i); d += t * t; i += 1 }
-      math.floor(d * 1e6 + 0.5) / 1e6
-    }
+    val kernel = udf { (v: Seq[Float]) => exactD2Of(bcQ.value, v) }
     df.select(id.as("id"), kernel(vec).as("d2"))
       .orderBy(col("d2"), col("id"))
       .limit(topK)
@@ -171,15 +188,8 @@ object ProductQuant {
   def adcFromCodes(df: DataFrame, id: Column, codes: Column,
       cents: Array[Array[Array[Double]]], query: Array[Double],
       topK: Int): DataFrame = {
-    val m = cents.length
-    val table = adcTable(query, cents)
-    val bcT = df.sparkSession.sparkContext.broadcast(table)
-    val kernel = udf { (cs: Seq[Int]) =>
-      var adc = 0.0
-      var j = 0
-      while (j < m) { adc += bcT.value(j)(cs(j)); j += 1 }
-      math.floor(adc * 1e6 + 0.5) / 1e6
-    }
+    val bcT = df.sparkSession.sparkContext.broadcast(adcTable(query, cents))
+    val kernel = udf { (cs: Seq[Int]) => adcOf(bcT.value, cs) }
     df.select(id.as("id"), kernel(codes).as("adc"))
       .orderBy(col("adc"), col("id"))
       .limit(topK)

@@ -52,7 +52,9 @@ private[graft] object SidecarIO {
   /** Write `fields` as a one-row parquet file under `dir` (created if
     * absent). `overwrite` clears the directory first — the Spark
     * `mode("overwrite")` contract; append adds a uniquely-named file,
-    * the generation-log contract. No Spark job runs.
+    * the generation-log contract. No Spark job runs. Staged files left
+    * by an earlier writer that crashed before its rename are deleted
+    * (one writer per sidecar, as every maintenance verb assumes).
     */
   def writeRow(conf: Configuration, dir: String, overwrite: Boolean,
       fields: Seq[Field]): Unit = {
@@ -65,14 +67,16 @@ private[graft] object SidecarIO {
     // so the staged file is invisible until the rename). On overwrite the
     // OLD files are removed only after the new row is durable — a crash
     // leaves old or old+new, never neither.
+    val listed = fs.listStatus(d).filter(_.isFile).map(_.getPath)
+    listed.filter(isStaged).foreach(fs.delete(_, false))
     val old =
-      if (overwrite) fs.listStatus(d).filter { s =>
-        val n = s.getPath.getName
-        s.isFile && !n.startsWith("_") && !n.startsWith(".")
-      }.map(_.getPath)
+      if (overwrite) listed.filter { p =>
+        val n = p.getName
+        !n.startsWith("_") && !n.startsWith(".")
+      }
       else Array.empty[Path]
     val name = f"part-${System.nanoTime()}%019d-${java.util.UUID.randomUUID()}.parquet"
-    val tmp = new Path(d, s".$name.staged")
+    val tmp = new Path(d, s".$name$Staged")
     val schema = schemaOf(fields)
     val out: OutputFile = org.apache.parquet.hadoop.util.HadoopOutputFile
       .fromPath(tmp, conf)
@@ -95,6 +99,11 @@ private[graft] object SidecarIO {
       throw new java.io.IOException(s"sidecar rename failed: $tmp -> $name")
     old.foreach(fs.delete(_, false))
   }
+
+  private val Staged = ".staged"
+
+  private def isStaged(p: Path): Boolean =
+    p.getName.startsWith(".") && p.getName.endsWith(Staged)
 
   /** All rows of every data file under `dir`, as name → value maps
     * (Int/Long/Double by the file's physical type; absent optional

@@ -222,12 +222,22 @@ class IvfPqSpec extends SparkSpec {
         topK = 10)
       .collect().map(r => (r.getAs[Long]("id"), r.getAs[Double]("d2"))).toSeq
     assert(fromIdx() === fromCorpus && fromCorpus.nonEmpty)
-    // the rerank plan reads ONLY the index directory — no corpus table
-    val plan = IvfPq.serveRerankedFromIndex(spark, idx, cents, pqCents,
-      anchor, nProbe = 3, rerankR = 30, topK = 10)
+    // the rerank plan reads ONLY the index directory — no corpus table:
+    // the distributed plan's scans, and the files the driver-local path
+    // opens
+    val plan = IvfPq.serveRerankedDistributed(spark, idx, cents, pqCents,
+      anchor, nProbe = 3, rerankR = 30, topK = 10, asOfGen = None)
       .queryExecution.executedPlan.toString()
-    assert(!plan.contains("embeddings.parquet"),
+    assert(plan.contains("FileScan") && !plan.contains("embeddings.parquet"),
       s"rerank-from-index must not scan the embeddings table:\n$plan")
+    val opened = collection.mutable.ArrayBuffer.empty[String]
+    DriverScan.onOpen = p => opened.synchronized { opened += p }
+    try IvfPq.serveRerankedFromIndex(spark, idx, cents, pqCents, anchor,
+      nProbe = 3, rerankR = 30, topK = 10).collect()
+    finally DriverScan.onOpen = _ => ()
+    val root = new java.io.File(idx).toURI.toString.stripSuffix("/")
+    assert(opened.nonEmpty && opened.forall(_.startsWith(root + "/cluster=")),
+      s"local rerank opened files outside $idx:\n${opened.mkString("\n")}")
     // ADC serving never pays for the stored vectors: column pruning
     // keeps `vec` out of every ReadSchema in its plan
     val adcPlan = IvfPq.serve(spark, idx, cents, pqCents, anchor,
